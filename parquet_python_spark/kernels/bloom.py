@@ -14,10 +14,12 @@ module is our equivalent over blockstore metadata rows:
   per distinct value rounded up to a power of two (so probe positions are
   a mask, not a mod), capped at ``MAX_BITS`` — pages too distinct to fit
   usefully store NULL and simply stay unprunable.
-* probing happens entirely JVM-side at plan time: the driver hashes the
-  filter LITERAL once (``probe_hashes``), and ``operators.pipeline``
-  builds a Catalyst predicate over the stored words — no Python touches
-  per-block data, so pruning scales with metadata rows, not store bytes.
+* ``probe(words, hash_pair)`` runs on the driver at plan time: the
+  literal is hashed once (``hash_pair_int`` / ``hash_pair_bytes``) and
+  probed against the words of each page of the filter column, which one
+  metadata query (``operators.pipeline.block_metadata``) brings back —
+  no Python touches block payloads, so pruning scales with metadata
+  rows, not store bytes.
 
 Hash: double hashing h(i) = h1 + i*h2 (Kirsch-Mitzenmacher) over two
 independent 32-bit streams of the value's canonical rendering —
@@ -29,8 +31,8 @@ crc32 loop was ~30% of total encode CPU at page granularity):
 * strings/binary hash with pandas' C siphash (``pd.util.hash_array``,
   two fixed 16-byte keys = two streams; one C pass over the array).
 
-Both streams are masked to 32 bits so the JVM-side probe's constant
-``h1 + i*h2`` stays comfortably inside a Catalyst long.  The stream
+Both streams are masked to 32 bits, so ``h1 + i*h2`` never overflows the
+uint64 position arithmetic of ``build``.  The stream
 definitions are a FORMAT CONSTANT: build (executor) and probe (driver
 literal hashing) must move together, and stores persist their filters.
 False positives only cost a wasted decode (the exact re-filter still
@@ -144,16 +146,20 @@ def build(arr: pa.Array, is_string: bool) -> list[int] | None:
     return words.view(np.int64).tolist()
 
 
-def maybe_contains(words: list[int], v: bytes | int) -> bool:
-    """Local probe (tests / driver-side checks); the production probe is
-    the Catalyst expression in ``operators.pipeline._bloom_pred``.
-    Pass bytes for the string rendering, an int for the integer one."""
-    m = len(words) * 64
-    h1, h2 = (hash_pair_int(v) if isinstance(v, int)
-              else hash_pair_bytes(v))
-    w = np.asarray(words, dtype=np.int64).view(np.uint64)
+def probe(words: list[int], hash_pair: tuple[int, int]) -> bool:
+    """Could the filter ``words`` hold the value whose (h1, h2) streams
+    are ``hash_pair``?  False is exact (no false negatives)."""
+    h1, h2 = hash_pair
+    mask = len(words) * 64 - 1  # filter sizes are powers of two
     for i in range(K):
-        p = (h1 + i * h2) & (m - 1)
-        if not (int(w[p >> 6]) >> (p & 63)) & 1:
+        p = (h1 + i * h2) & mask
+        if not (words[p >> 6] >> (p & 63)) & 1:
             return False
     return True
+
+
+def maybe_contains(words: list[int], v: bytes | int) -> bool:
+    """``probe`` for a raw value: bytes for the string rendering, an int
+    for the integer one."""
+    return probe(words, hash_pair_int(v) if isinstance(v, int)
+                 else hash_pair_bytes(v))

@@ -54,6 +54,10 @@ ROUNDS = 3              # symbol length up to 2**ROUNDS = 8 bytes
 # synthetic code content, at ~10-15% single-thread encode cost (later
 # rounds run on already-shrunk streams).
 ROUND_BUDGETS = (96, 96, 32)
+# a merge round takes the mask path when at least 1/DENSE_FRAC of its
+# pairs are candidates, the index path otherwise; both choose the same
+# pairs, so the encoded bytes do not depend on the switch
+DENSE_FRAC = 4
 SAMPLE_BYTES = 4 << 20  # table is built from at most 4 MiB of sample.
 # Sized so a standard page's per-column text share falls WITHIN the
 # sample: _build_table's merged output is then reused directly and the
@@ -138,7 +142,7 @@ def _apply_merges(stream: np.ndarray, lut: np.ndarray,
         return stream
     # caller-owned buffer (built by _strings_to_symbols or a prior round):
     # mutate in place instead of copying 2 bytes/symbol per round
-    if n_cand * 4 >= len(cand):
+    if n_cand * DENSE_FRAC >= len(cand):
         # dense (text round 0): mask path, no index arrays
         chosen = _greedy_left_mask(cand)
         stream[:-1][chosen] = new_ids[chosen]
@@ -170,7 +174,8 @@ def _build_table(sample: np.ndarray):
     luts: list[np.ndarray] = []
     exp_of: dict[int, bytes] = {}
     # byte length of each symbol id's expansion (base bytes = 1; SENTINEL
-    # never appears in a candidate pair because of the `ok` mask)
+    # never appears in a candidate pair: its rows and columns of the pair
+    # count table are zeroed below)
     exp_len = np.ones(512, dtype=np.int64)
     stream = sample
     next_id = BASE

@@ -25,7 +25,6 @@ definition levels (reference analogue: fastparquet/core.py:51-82).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 
 from ..kernels import (bitpack, compression, delta, dictionary, fsst,
@@ -523,6 +522,3 @@ def decode_block(block: bytes) -> pa.Array:
         return vals.take(idx_arr)
     return _decode_values(raw, dt, codec, n)
 
-
-def decode_block_to_pandas(block: bytes) -> pd.Series:
-    return decode_block(block).to_pandas()

@@ -22,9 +22,12 @@ Reference parity map:
 * ``ParquetFile.to_pandas`` + ``read_col`` (api.py:691-794, core.py:430-588)
   → ``decode_blocks``: group the (page × column) blocks of one page and
   reassemble the original rows; column projection = a filter on the
-  ``column`` field (the scan then never ships the other blocks); stats
-  pruning = ``prune_blocks`` with the same filter algebra the reference
-  applies to row-group stats (api.py:1125-1183).
+  ``column`` field (the scan then never ships the other blocks).  Part
+  pruning (``prune_blocks``) is the reference's ``filter_out_stats``
+  algebra over row-group stats (api.py:1125-1183), run in plain Python
+  on the driver over one metadata query (``block_metadata``): page
+  min/max stats and Bloom filters decide which parts to keep, and the
+  decode scan reads them through a pushed ``part_key`` IN-list.
 
 Everything row-wise runs inside Arrow-vectorized pandas UDFs; no per-row
 Python anywhere (input_hint).
@@ -1653,8 +1656,39 @@ def merge_stores(spark: SparkSession, paths: list[str], out_path: str) -> dict:
 
 # -------------------------------------------------------------------- decode
 
-def _schema_from_column_rows(rows) -> StructType:
-    """(column, col_idx, dts) records -> decoded StructType.
+def block_metadata(blocks: DataFrame, filters=None) -> list:
+    """The one metadata query behind decode planning: a row per
+    (part_key, column) with the column's ``col_idx`` (min), ``dts`` (set
+    of dtype_id) and ``bytes`` (summed encoded_size) — the consolidated
+    footer the reference reads before any data (``_metadata``).  Rows of
+    a column that ``filters`` can prune on also carry ``pages``: one
+    (dtype_id, min_s, max_s, min_num, max_num, bloom) per page, with Bloom
+    words only for ``==`` / ``=`` / ``in`` columns.  The ``block`` payload
+    is never read; the result is bounded by parts x columns plus the
+    pages of the filter columns."""
+    groups = _norm_filters(filters)
+    aggs = [F.min("col_idx").alias("col_idx"),
+            F.collect_set("dtype_id").alias("dts"),
+            F.sum("encoded_size").alias("bytes")]
+    if groups:
+        def named(ops):  # both spellings of a literally dotted name
+            cs = {c for grp in groups for (c, op, _) in grp if op in ops}
+            return sorted(cs | {c.replace(".", META_ESC) for c in cs})
+
+        words = F.lit(None).cast("array<bigint>")
+        if "bloom" in blocks.columns:  # stores predate the bloom column
+            words = F.when(F.col("column").isin(named(_EQ_OPS)),
+                           F.col("bloom"))
+        page = F.struct("dtype_id", "min_s", "max_s", "min_num", "max_num",
+                        words.alias("bloom"))
+        aggs.append(F.collect_list(F.when(
+            F.col("column").isin(named(_PRUNE_OPS)), page)).alias("pages"))
+    return blocks.groupBy("part_key", "column").agg(*aggs).collect()
+
+
+def metadata_schema(meta) -> StructType:
+    """``block_metadata`` rows -> decoded StructType (name, order, dtype):
+    the thrift-footer-schema analogue (fastparquet/schema.py).
 
     Schema EVOLUTION aware: generations appended with extra columns give
     the union of all column names (first-seen col_idx order, so old
@@ -1663,9 +1697,12 @@ def _schema_from_column_rows(rows) -> StructType:
     loudly rather than mis-decoding (type widening is re-encode-time
     work — ``recode_blocks`` — not read-time guesswork)."""
     from pyspark.sql.pandas.types import from_arrow_type
-    rows = sorted(rows, key=lambda r: (r["col_idx"], r["column"]))
-    conflicts = {r["column"]: sorted(r["dts"]) for r in rows
-                 if len(r["dts"]) > 1}
+    cols: dict[str, tuple[int, set]] = {}
+    for r in meta:
+        idx, dts = cols.get(r["column"], (r["col_idx"], set()))
+        cols[r["column"]] = (min(idx, r["col_idx"]), dts | set(r["dts"]))
+    names = sorted(cols, key=lambda c: (cols[c][0], c))
+    conflicts = {c: sorted(cols[c][1]) for c in names if len(cols[c][1]) > 1}
     if conflicts:
         raise ValueError(
             f"columns with conflicting dtypes across parts: {conflicts} — "
@@ -1673,21 +1710,9 @@ def _schema_from_column_rows(rows) -> StructType:
     # spark_safe: unsigned widths promote to the next wider signed type
     # (Spark has no unsigned types; reference promotion api.py:974-996)
     return StructType([
-        StructField(r["column"],
-                    from_arrow_type(enc.spark_safe_arrow_type(sorted(r["dts"])[0])),
-                    True)
-        for r in rows])
-
-
-def infer_schema_from_blocks(blocks: DataFrame) -> StructType:
-    """Recover the decoded schema (name, order, arrow dtype) from block
-    metadata — the thrift-footer-schema analogue (fastparquet/schema.py).
-    See ``_schema_from_column_rows`` for the evolution semantics."""
-    rows = (blocks.groupBy("column")
-            .agg(F.min("col_idx").alias("col_idx"),
-                 F.collect_set("dtype_id").alias("dts"))
-            .collect())
-    return _schema_from_column_rows(rows)
+        StructField(c, from_arrow_type(
+            enc.spark_safe_arrow_type(next(iter(cols[c][1])))), True)
+        for c in names])
 
 
 def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
@@ -1695,84 +1720,62 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
                   reassemble: bool = True,
                   tasks: int | None = None) -> DataFrame:
     """Blocks -> original rows. Projection prunes blocks before the shuffle;
-    ``filters`` additionally prunes whole blocks on min/max stats, then
-    re-applies the exact predicate on decoded rows (the reference's two-level
-    scheme: filter_row_groups then row_filter, api.py:691-794).
+    ``filters`` additionally prunes whole parts on min/max stats and Bloom
+    filters, then re-applies the exact predicate on decoded rows (the
+    reference's two-level scheme: filter_row_groups then row_filter,
+    api.py:691-794).  Planning is ONE metadata job (``block_metadata``):
+    schema, coverage and pruning are worked out from it on the driver.
     ``keep_part_key=True`` prepends the originating part_key to every row
     (store-maintenance ops re-encode rows under their original parts).
     ``tasks`` caps concurrent decode workers (hash repartition on
     part_key that the group-decode reuses — same memory-bandwidth
     rationale as ``run_encode(encode_tasks=)``)."""
     user_cols = list(columns) if columns is not None else None
-    if filters is not None:
-        need = {c for grp in _norm_filters(filters) for (c, _, _) in grp}
-        if columns is not None:
-            columns = list(dict.fromkeys(list(columns) + [c for c in need if c not in columns]))
+    groups = _norm_filters(filters)
+    if groups and columns is not None:
+        need = [c for grp in groups for (c, _, _) in grp]
+        columns = list(dict.fromkeys(list(columns) + need))
+    # the schema comes from ALL parts, before pruning: a filter that
+    # prunes every part must still yield an empty frame with the right
+    # columns, not an unresolvable zero-column plan
+    meta = block_metadata(blocks, groups)
     if columns is not None:
         # a requested struct column matches its dotted children; a column
         # literally named 'a.b' matches its META_ESC metadata spelling
         match = list(dict.fromkeys(
             list(columns) + [c.replace(".", META_ESC) for c in columns
                              if "." in c]))
+        children = tuple(c + "." for c in columns)
+        proj = [r for r in meta
+                if r["column"] in match or r["column"].startswith(children)]
         cond = F.col("column").isin(match)
         for c in columns:
             cond = cond | F.col("column").startswith(c + ".")
-        all_blocks = blocks
+        # schema evolution: a part lacking EVERY projected column would
+        # form no decode group and its rows would silently vanish instead
+        # of null-filling (r3 ADVICE; the reference NA-fills absent
+        # columns for every row group, fastparquet api.py:566-573).  Such
+        # a part keeps one SIZER column — its decoded length sizes the
+        # null fill; decode_group ignores non-projected columns otherwise.
+        # Smallest encoded footprint wins, name as the tiebreak (r4
+        # ADVICE: a wide text column would decode its whole payload just
+        # to count rows).
+        covered = {r["part_key"] for r in proj}
+        sizer: dict[int, tuple] = {}
+        for r in meta:
+            if r["part_key"] not in covered:
+                cand = (r["bytes"], r["column"])
+                sizer[r["part_key"]] = min(cand, sizer.get(r["part_key"], cand))
+        by_col: dict[str, list[int]] = {}
+        for pk, (_, c) in sorted(sizer.items()):
+            by_col.setdefault(c, []).append(pk)
+        for c, pks in sorted(by_col.items()):
+            cond = cond | ((F.col("column") == c) & F.col("part_key").isin(pks))
         blocks = blocks.where(cond)
-        # infer the schema BEFORE stats pruning: a filter that prunes
-        # every part must still yield an empty frame with the right
-        # columns, not an unresolvable zero-column plan.
-        # ONE metadata job (grouping sets) serves both the projected
-        # schema (per-column rows) and the schema-evolution coverage
-        # check (the grand-total row): does any part lack EVERY projected
-        # column?  Such a part would form no decode group and its rows
-        # would silently vanish instead of null-filling (r3 ADVICE; the
-        # reference NA-fills absent columns for every row group,
-        # fastparquet api.py:566-573).  Column-pruned — payload never read.
-        grows = (all_blocks
-                 .withColumn("_proj", cond)
-                 .groupingSets([[F.col("column")], []], F.col("column"))
-                 .agg(F.min(F.when(F.col("_proj"), F.col("col_idx")))
-                      .alias("col_idx"),
-                      F.collect_set(F.when(F.col("_proj"), F.col("dtype_id")))
-                      .alias("dts"),
-                      F.countDistinct("part_key").alias("n_all"),
-                      F.countDistinct(F.when(F.col("_proj"),
-                                             F.col("part_key")))
-                      .alias("n_cov"),
-                      F.grouping("column").alias("_g"))
-                 .collect())
-        schema = _schema_from_column_rows(
-            [r for r in grows if r["_g"] == 0 and r["dts"]])
-        total = next((r for r in grows if r["_g"] == 1), None)
-        if total is not None and total["n_cov"] < total["n_all"]:
-            # retain one SIZER column per uncovered part — its decoded
-            # length sizes the null fill; decode_group ignores
-            # non-projected columns otherwise.  Pick the column with the
-            # SMALLEST encoded footprint (r4 ADVICE: lexicographic min
-            # could select a wide text column and decode its whole
-            # payload just to count rows), name as the tiebreak.
-            percol = (all_blocks
-                      .groupBy("part_key", "column")
-                      .agg(F.max(cond.cast("int")).alias("_proj"),
-                           F.sum("encoded_size").alias("_bytes")))
-            uncovered = (percol
-                         .groupBy("part_key")
-                         .agg(F.max("_proj").alias("_has"),
-                              F.min(F.when(F.col("_proj") == 0, F.struct(
-                                  F.col("_bytes"), F.col("column"))))
-                              .alias("_sz"))
-                         .where(F.col("_has") == 0)
-                         .select("part_key",
-                                 F.col("_sz.column").alias("_sizer")))
-            sizer_blocks = (all_blocks
-                            .join(uncovered, "part_key", "inner")
-                            .where(F.col("column") == F.col("_sizer"))
-                            .drop("_sizer"))
-            blocks = blocks.unionByName(sizer_blocks)
+        schema = metadata_schema(proj)
     else:
-        schema = infer_schema_from_blocks(blocks)
-    if filters is not None:
+        schema = metadata_schema(meta)
+    if groups:
         # resolve filter names against the flat metadata schema: exact
         # (struct-path) spelling wins; else the escaped literal-dot one
         names = {f.name for f in schema.fields}
@@ -1780,8 +1783,8 @@ def decode_blocks(blocks: DataFrame, columns: list[str] | None = None,
                      else (c.replace(".", META_ESC)
                            if c.replace(".", META_ESC) in names else c),
                      op, v) for (c, op, v) in grp]
-                   for grp in _norm_filters(filters)]
-        blocks = prune_blocks(blocks, filters)
+                   for grp in groups]
+        blocks = _where_kept(blocks, meta, filters)
     if keep_part_key:
         schema = StructType(
             [StructField("part_key", LongType(), False)] + list(schema.fields))
@@ -1901,16 +1904,6 @@ def _prune_literals(v) -> dict:
     return out
 
 
-def _num_lit_expr(lits: dict):
-    """Per-block-row literal: picks the rendering that matches the block's
-    integer-view units (µs for timestamps, days for date32)."""
-    return (F.when(F.col("dtype_id") == enc.DT_TIMESTAMP_US,
-                   F.lit(lits["ts"]).cast("double"))
-            .when(F.col("dtype_id") == enc.DT_DATE32,
-                  F.lit(lits["days"]).cast("double"))
-            .otherwise(F.lit(lits["num"]).cast("double")))
-
-
 def _bloom_item_hashes(v) -> dict:
     """(h1, h2) stream pairs per canonical rendering of one equality
     literal, keyed like ``_prune_literals``: ``str`` (utf-8 / raw bytes),
@@ -1958,150 +1951,120 @@ def _bloom_item_hashes(v) -> dict:
     return out
 
 
-def _bloom_probe(words, hp: tuple[int, int]):
-    """Catalyst maybe-contains: K constant double-hash positions masked by
-    the per-row filter size (a power of two), each bit fetched with
-    element_at + bit_get — pruning runs JVM-side over metadata rows
-    only."""
-    m_mask = F.size(words).cast("long") * 64 - 1
-    cond = F.lit(True)
-    for i in range(bloom.K):
-        pos = F.lit(int(hp[0] + i * hp[1])).bitwiseAND(m_mask)
-        word = F.element_at(words, F.shiftrightunsigned(pos, 6).cast("int") + 1)
-        cond = cond & (F.bit_get(word, pos.bitwiseAND(F.lit(63)).cast("int"))
-                       == 1)
-    return cond
-
-
 _BLOOM_PLAIN_INT_DTS = (enc.DT_INT64, enc.DT_INT32, enc.DT_INT16,
                         enc.DT_INT8, enc.DT_UINT64, enc.DT_UINT32,
                         enc.DT_UINT16, enc.DT_UINT8)
+_EQ_OPS = ("==", "=", "in")
+# != / not in: stats can't disprove cheaply, so those triples never prune
+_PRUNE_OPS = _EQ_OPS + ("<", "<=", ">", ">=")
 
 
-def _bloom_item_pred(words, v):
-    """Per-block-row: could this block contain ``v``?  Picks the hash
-    rendering matching the block's dtype (like ``_num_lit_expr``); blocks
-    without a filter, or dtypes without a rendering, stay possible."""
-    hs = _bloom_item_hashes(v)
-
-    def p(hp):
-        return _bloom_probe(words, hp) if hp is not None else F.lit(True)
-
-    chain = (F.when(F.col("dtype_id").isin(list(_BLOOM_STR_DTS)),
-                    p(hs["str"]))
-             .when(F.col("dtype_id") == enc.DT_TIMESTAMP_US, p(hs["ts"]))
-             .when(F.col("dtype_id") == enc.DT_DATE32, p(hs["days"]))
-             .when(F.col("dtype_id").isin(list(_BLOOM_PLAIN_INT_DTS)),
-                   p(hs["int"]))
-             .otherwise(F.lit(True)))
-    return F.when(words.isNull(), F.lit(True)).otherwise(chain)
-
-
-def _range_pred(lo, hi, lit, op):
-    """Can a value satisfying ``x op lit`` exist in [lo, hi]?"""
-    if op in ("==", "="):
-        return (lo <= lit) & (hi >= lit)
+def _in_range(lo, hi, x, op: str) -> bool:
+    """Can a value satisfying ``v op x`` lie in [lo, hi]?"""
+    if op in _EQ_OPS:
+        return lo <= x <= hi
     if op == "<":
-        return lo < lit
+        return lo < x
     if op == "<=":
-        return lo <= lit
+        return lo <= x
     if op == ">":
-        return hi > lit
-    if op == ">=":
-        return hi >= lit
-    return F.lit(True)  # != / not in: stats can't disprove cheaply
+        return hi > x
+    return hi >= x
+
+
+def _bloom_hit(words: list[int], dt: int, hashes: dict) -> bool:
+    """Probe with the literal rendering matching the page dtype; a dtype
+    or literal without a rendering can't be refuted."""
+    key = ("str" if dt in _BLOOM_STR_DTS
+           else "ts" if dt == enc.DT_TIMESTAMP_US
+           else "days" if dt == enc.DT_DATE32
+           else "int" if dt in _BLOOM_PLAIN_INT_DTS else None)
+    hp = hashes.get(key)
+    return hp is None or bloom.probe(words, hp)
+
+
+def _page_test(op: str, v):
+    """Verdict of ``(c, op, v)`` on one ``block_metadata`` page of c:
+    True (may hold a match), False (refuted by stats or Bloom filter) or
+    None (ineligible: no usable stats and no filter).  Strings compare
+    against min_s/max_s (UTF-8 byte order = code point order, as in
+    Spark); ints / floats / bools / timestamps / dates against the typed
+    min_num/max_num doubles in the page dtype's units (reference typed-
+    stat coercion: api.py:1425-1518).  A literal that can't be read as
+    the page's type (None rendering) never refutes."""
+    items = list(v) if op == "in" else [v]
+    lits = [_prune_literals(x) for x in items]
+    strs = [lt["s"] for lt in lits]
+    use_s = None not in strs
+    hashes = [_bloom_item_hashes(x) for x in items] if op in _EQ_OPS else []
+    # a truncated-beyond-repair max stat is stored NULL — such a page is
+    # eligible only for ops that don't consult the max
+    need_lo = op in ("==", "=", "in", "<", "<=")
+    need_hi = op in ("==", "=", "in", ">", ">=")
+
+    def test(p):
+        dt = p["dtype_id"]
+        lo = hi = vals = None
+        if dt == enc.DT_STRING and use_s:
+            lo, hi, vals = p["min_s"], p["max_s"], strs
+        elif dt in _NUMERIC_DTS:
+            key = ("ts" if dt == enc.DT_TIMESTAMP_US
+                   else "days" if dt == enc.DT_DATE32 else "num")
+            lo, hi = p["min_num"], p["max_num"]
+            vals = [lt[key] for lt in lits]
+        stats = (vals is not None and not (need_lo and lo is None)
+                 and not (need_hi and hi is None))
+        words = p["bloom"] if op in _EQ_OPS else None
+        if not stats and words is None:
+            return None
+        if stats and not any(x is None or _in_range(lo, hi, x, op)
+                             for x in vals):
+            return False
+        return words is None or any(_bloom_hit(words, dt, h) for h in hashes)
+    return test
+
+
+def _kept_parts(meta, groups) -> set[int]:
+    """Parts of ``block_metadata`` rows that may hold a row matching the
+    OR-of-ANDs ``groups`` — the reference's ``filter_out_stats``
+    (api.py:1125-1183) over our page stats, in plain Python.  Pages are
+    per-column row splits, so the prunable unit is the part (row group):
+    a triple refutes a part when some page of its column is refuted and
+    none may match; a part with no eligible page of the column is kept."""
+    pages = {(r["part_key"], r["column"]): r["pages"] for r in meta}
+    tests = [[(c, _page_test(op, v)) for c, op, v in grp if op in _PRUNE_OPS]
+             for grp in groups]
+
+    def possible(part, c, test) -> bool:
+        seen = {test(p) for p in pages.get((part, c), ())}
+        return True in seen or False not in seen
+
+    return {part for part in {r["part_key"] for r in meta}
+            if any(all(possible(part, c, t) for c, t in grp)
+                   for grp in tests)}
+
+
+def _where_kept(blocks: DataFrame, meta, groups) -> DataFrame:
+    """``blocks`` restricted to the parts pruning keeps: an IN-list on
+    part_key, which the blockstore parquet scan takes as a pushed filter;
+    no filter at all when nothing is pruned."""
+    kept = _kept_parts(meta, groups)
+    if len(kept) == len({r["part_key"] for r in meta}):
+        return blocks
+    return blocks.where(F.col("part_key").isin(sorted(kept)))
 
 
 def prune_blocks(blocks: DataFrame, filters) -> DataFrame:
-    """Drop whole *parts* whose stats prove no row can match — the
-    reference's ``filter_out_stats`` (api.py:1125-1183) over our block
-    stats.  Pages are per-column row splits, so the prunable unit is the
-    part (row group): a triple (c, op, v) is possibly-true for a part if
-    ANY page of column c could contain a matching value.
-
-    Strings compare against min_s/max_s (lexicographic, upper-bound-safe
-    truncation); ints / floats / bools / timestamps / dates against the
-    typed min_num/max_num doubles (reference typed-stat coercion:
-    api.py:1425-1518).  Ineligible blocks (no stats, unparseable literal,
-    unsupported dtype) are kept — correctness is preserved by the exact
-    re-filter after decode."""
+    """Drop whole *parts* whose stats or Bloom filters prove no row can
+    match ``filters`` (see ``_kept_parts``): one metadata query, the
+    decision on the driver, then a part_key IN-list on ``blocks``.
+    Ineligible pages (no stats, unparseable literal, unsupported dtype)
+    are kept — correctness is preserved by the exact re-filter after
+    decode."""
     groups = _norm_filters(filters)
     if not groups:
         return blocks
-
-    sel = ["part_key", "column", "dtype_id",
-           "min_s", "max_s", "min_num", "max_num"]
-    has_bloom = "bloom" in blocks.columns  # stores predate the bloom column
-    if has_bloom:
-        sel.append("bloom")
-    stats = blocks.select(*sel)
-    lo_s, hi_s = F.col("min_s"), F.col("max_s")
-    lo_n, hi_n = F.col("min_num"), F.col("max_num")
-    surviving = None
-    for grp in groups:
-        cond = F.lit(True)
-        for c, op, v in grp:
-            is_col = F.col("column") == c
-            # a truncated-beyond-repair max stat is stored NULL — such a
-            # page is eligible only for ops that don't consult the max
-            need_min = op in ("==", "=", "<", "<=", "in")
-            need_max = op in ("==", "=", ">", ">=", "in")
-            items = list(v) if op == "in" else [v]
-            lits = [_prune_literals(item) for item in items]
-
-            elig_s = is_col & (F.col("dtype_id") == enc.DT_STRING)
-            if need_min:
-                elig_s = elig_s & lo_s.isNotNull()
-            if need_max:
-                elig_s = elig_s & hi_s.isNotNull()
-            poss_s = F.lit(False)
-            s_vals = [lt["s"] for lt in lits]
-            if all(s is not None for s in s_vals):
-                for s in s_vals:
-                    poss_s = poss_s | _range_pred(lo_s, hi_s, F.lit(s),
-                                                  "==" if op == "in" else op)
-            else:
-                elig_s = F.lit(False)
-
-            elig_n = is_col & F.col("dtype_id").isin(list(_NUMERIC_DTS))
-            if need_min:
-                elig_n = elig_n & lo_n.isNotNull()
-            if need_max:
-                elig_n = elig_n & hi_n.isNotNull()
-            poss_n = F.lit(False)
-            n_exprs = [_num_lit_expr(lt) for lt in lits]
-            for ne in n_exprs:
-                poss_n = poss_n | _range_pred(lo_n, hi_n, ne,
-                                              "==" if op == "in" else op)
-            # a null typed literal (value unparseable for this dtype) makes
-            # the comparison null -> coalesce to "possible" (keep)
-            poss_n = F.coalesce(poss_n, F.lit(True))
-
-            # bloom channel: equality/IN literals probe the page's Bloom
-            # filter — the one pruner that works on high-cardinality
-            # UNSORTED columns where every [min, max] spans the domain
-            bloom_poss = F.lit(True)
-            elig_b = F.lit(False)
-            if has_bloom and op in ("==", "=", "in"):
-                bp = F.lit(False)
-                for item in items:
-                    bp = bp | _bloom_item_pred(F.col("bloom"), item)
-                bloom_poss = bp
-                elig_b = is_col & F.col("bloom").isNotNull()
-
-            eligible = elig_s | elig_n | elig_b
-            stats_poss = (F.when(elig_s, F.coalesce(poss_s, F.lit(True)))
-                          .when(elig_n, poss_n)
-                          .otherwise(F.lit(True)))
-            possible = eligible & stats_poss & bloom_poss
-            has_eligible = F.max(F.when(eligible, 1).otherwise(0)) == 1
-            any_possible = F.max(F.when(possible, 1).otherwise(0)) == 1
-            cond = cond & F.when(has_eligible, any_possible).otherwise(F.lit(True))
-        surviving = cond if surviving is None else (surviving | cond)
-    keep = (stats.groupBy("part_key").agg(surviving.alias("_keep"))
-            .where(F.col("_keep")).select("part_key"))
-    # one row per part — broadcast so the blocks side never shuffles
-    return blocks.join(F.broadcast(keep), ["part_key"], "left_semi")
+    return _where_kept(blocks, block_metadata(blocks, groups), groups)
 
 
 def export_hive(df: DataFrame, path: str, partition_cols: list[str],

@@ -6,9 +6,11 @@ fastparquet/api.py:1330-1518; ops map fastparquet/util.py:528-536), re-expressed
 as a translator to a single pyspark ``Column`` predicate.  In the reference
 these filters drive row-group *skipping* against min/max stats; on Spark the
 same triples become a Catalyst predicate — pushdown, partition pruning and
-row-group skipping then happen inside the scan for free.  The identical
-algebra is also applied to our *blockstore lineage stats* (min/max per block)
-to prune blocks before decode — see ``operators.pipeline.prune_blocks``.
+row-group skipping then happen inside the scan for free.  Over our
+blockstore, the same triples first prune whole parts on the driver, from
+one metadata query of page stats and Bloom filters (see
+``operators.pipeline.prune_blocks``); this module then supplies the exact
+row filter applied after decode.
 
 Accepted shapes (same as the reference):
     [(c, op, v), ...]                 -> AND of all triples

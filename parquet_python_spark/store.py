@@ -87,7 +87,7 @@ class BlockStore:
 
     @property
     def dtypes(self) -> dict[str, str]:
-        schema = pl.infer_schema_from_blocks(self.blocks)
+        schema = pl.metadata_schema(pl.block_metadata(self.blocks))
         return {f.name: f.dataType.simpleString() for f in schema.fields}
 
     def to_spark(self, columns=None, filters=None) -> DataFrame:

@@ -1,6 +1,8 @@
 """Physical-plan assertions: the declarative pipeline must actually get
 Catalyst's pushdown/pruning/broadcast — not just produce correct rows.
 These are the properties that decide whether the design survives 100 TB."""
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -77,7 +79,6 @@ def test_shingle_generation_is_shuffle_free(spark):
     # underpartitioned
     assert "Window" not in plan, plan
     assert "hashpartitioning" not in plan, plan
-    import re
     exchanges = re.findall(r"Exchange \w+", plan)
     assert all("roundrobin" in e.lower() for e in exchanges), exchanges
 
@@ -104,7 +105,43 @@ def test_encode_has_single_data_shuffle(spark):
     # exactly one exchange moves the fact table (by part_key); any other
     # hash exchange may only belong to the tiny per-repo plan aggregate
     assert plan.count("hashpartitioning(part_key") == 1, plan
-    import re
     others = [m.group(0) for m in re.finditer(r"Exchange hashpartitioning\((\w+)", plan)
               if m.group(1) != "part_key"]
     assert all("repo" in o for o in others), others
+
+
+def _executions(spark) -> int:
+    """SQL executions the status store has recorded so far (the count
+    perfbench's trace attributes per operation)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return spark._jsparkSession.sharedState().statusStore() \
+        .executionsList().size()
+
+
+def _pushed(plan: str) -> str:
+    return " ".join(line.split("PushedFilters:")[1].split("], ")[0]
+                    for line in plan.splitlines() if "PushedFilters:" in line)
+
+
+def test_filtered_decode_is_one_metadata_job_and_a_pruned_scan(spark, tmp_path):
+    """Part pruning is planned on the driver from ONE metadata query and
+    reaches the blockstore scan as a pushed part_key IN-list — no stats
+    aggregate, broadcast or semi-join in the decode job; an unpruned
+    decode adds no part_key filter at all."""
+    store = str(tmp_path / "store")
+    df = cg.code_table(spark, 600, partitions=2)
+    pl.run_encode(df, store, target_rows=100, resume=False)
+    blocks = pl.read_blocks(spark, store)
+    key = df.select("commit").first()[0]
+    before = _executions(spark)
+    q = pl.decode_blocks(blocks, filters=[("commit", "==", key)])
+    got = q.toArrow()
+    assert _executions(spark) - before == 2
+    assert key in got.column("commit").to_pylist()
+    plan = _plan(q)
+    assert "LeftSemi" not in plan and "BroadcastHashJoin" not in plan, plan
+    # a one-part IN-list is optimised to EqualTo
+    assert re.search(r"(In|EqualTo)\(part_key", _pushed(plan)), plan
+    unpruned = _plan(pl.decode_blocks(blocks,
+                                      filters=[("commit", "!=", key)]))
+    assert "part_key" not in _pushed(unpruned), unpruned

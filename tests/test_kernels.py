@@ -234,9 +234,14 @@ def test_greedy_left_mask_equals_index_path(rng):
             assert (np.diff(idx) >= 2).all()
 
 
-def test_fsst_encode_deterministic_across_paths(rng):
-    """Same input encodes to identical bytes regardless of which greedy
-    path density selects (locks the adaptive switch out of the output)."""
+def test_fsst_encode_deterministic_across_paths(rng, monkeypatch):
+    """Same input encodes to identical bytes whichever greedy path each
+    merge round takes (locks the adaptive switch out of the output)."""
     strings = _code_like_strings(300, rng)
     arr = pa.array(strings, type=pa.string())
-    assert fsst.encode(arr) == fsst.encode(arr)
+    auto = fsst.encode(arr)
+    monkeypatch.setattr(fsst, "DENSE_FRAC", 0)  # every round: index path
+    sparse = fsst.encode(arr)
+    monkeypatch.setattr(fsst, "DENSE_FRAC", 1 << 30)  # every round: mask
+    dense = fsst.encode(arr)
+    assert sparse == auto == dense
